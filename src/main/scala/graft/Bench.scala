@@ -83,6 +83,18 @@ import graft.monitoring.PerformanceTracker
   * artifact itself. */
 object Bench {
 
+  /** Where the compact total line is written: the explicit override if
+    * given; a subset run lands in tmp; a run at a core count other than
+    * the machine's writes `bench_total_c<N>.json`, so it never
+    * overwrites the default-count `bench_total.json`. */
+  private[graft] def totalPath(explicit: Option[String], subset: Boolean,
+                               cpus: Int, available: Int): String =
+    explicit.getOrElse(
+      if (subset) java.nio.file.Paths.get(
+        System.getProperty("java.io.tmpdir"), "bench_total_subset.json").toString
+      else if (cpus != available) s"bench_total_c$cpus.json"
+      else "bench_total.json")
+
   /** The load-evidence decision, pure so BenchSpec can pin the r12
     * calibration as executable facts (see the threshold comment at
     * the call site for the measured populations behind each arm). */
@@ -278,17 +290,7 @@ object Bench {
       try f.mkString.trim.split("\\s+")(0).toDouble finally f.close()
     } catch { case _: Throwable => -1.0 }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // required for TIMESTAMP(NANOS) events.parquet (see GraftSession)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
+    val spark = GraftSession.get()
     val tracker = PerformanceTracker.install(spark)
 
     // bus-quiescence wait: give the FIRST event after `floor` a longer
@@ -1121,7 +1123,7 @@ object Bench {
     // the map is ~5 KB — far under any sane tail bound — so carrying
     // it here costs nothing and makes the official record
     // self-contained (the detail line keeps the full telemetry).
-    val compactLine = s"""{"metric":"total","failed_count":$failedCount,"value":$total,"unit":"sec","cold_total":$coldTotal,"n_queries":${results.size},"queries":$qs,"failed":$failed,"retried_ok":$retriedJ,"bench_excluded":$excludedJ,"spill_bytes_total":$spillTotal,"slowest5":$slowest,"floor_drift":$floorDrift,"load_max_1m":$loadMax,"load_triggered":$loadEvident,"n_repassed":${repassed.size},"sf":"$sfDir"}"""
+    val compactLine = s"""{"metric":"total","failed_count":$failedCount,"value":$total,"unit":"sec","cold_total":$coldTotal,"n_queries":${results.size},"queries":$qs,"failed":$failed,"retried_ok":$retriedJ,"bench_excluded":$excludedJ,"spill_bytes_total":$spillTotal,"slowest5":$slowest,"floor_drift":$floorDrift,"load_max_1m":$loadMax,"load_triggered":$loadEvident,"n_repassed":${repassed.size},"sf":"$sfDir","cpus":${GraftSession.cpus}}"""
     println(compactLine)
     // r21 (VERDICT r20 item 1): the driver's parse of the bench stdout
     // recorded `parsed: null` in ALL 20 rounds — the line reaches its
@@ -1129,18 +1131,16 @@ object Bench {
     // compact line (a) bare on stderr (build.sbt now passes forked run
     // output through unprefixed) and (b) to a small fixed-size file
     // next to bench_detail.json, so any reasonable parse succeeds.
-    // Subset runs redirect to tmp exactly like the detail file (same
-    // r9 clobber guard).
+    // [[totalPath]] keeps subset and non-default-core runs off the
+    // default file.
     System.err.println(compactLine)
-    try {
-      val totalPath = sys.env.get("SPARK_GRAFT_BENCH_TOTAL").getOrElse(
-        if (onlyEnv.isDefined)
-          java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-            "bench_total_subset.json").toString
-        else "bench_total.json")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(totalPath),
-        compactLine + "\n")
-    } catch { case _: Throwable => () }
+    val totalFile = totalPath(sys.env.get("SPARK_GRAFT_BENCH_TOTAL"),
+      subset = onlyEnv.isDefined, GraftSession.cpus, cpusAvail)
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(totalFile),
+      compactLine + "\n")
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] could not write $totalFile: $e")
+    }
     spark.stop()
   }
 }

@@ -129,8 +129,9 @@ object GraftApi {
     *     DCLM/fineweb-edu classifier axis, with its own manifest row,
     *  2. exact dedup keeping the highest-quality copy per content,
     *  2b. optional eval-set decontamination (`benchmark = Some(df)`):
-    *     documents sharing ≥ `decontamMinShared` distinct n-gram
-    *     shingles with the benchmark are dropped
+    *     documents the `decontam` stage flags (default
+    *     [[DecontamStage.Exact]]: ≥ 3 distinct n-gram shingles shared
+    *     with the benchmark) are dropped
     *     ([[graft.operators.Dedup.decontaminate]] — guarded-broadcast
     *     semi-join; the corpus side never shuffles). Runs after exact
     *     dedup (no point shingling copies a hash rule removes) and
@@ -145,7 +146,8 @@ object GraftApi {
     *     2-3 cannot see; runs after them so spans repeated only among
     *     dropped duplicates don't trigger cuts,
     *  4. PII redaction of the surviving text,
-    *  5. optional per-source quota sampling (data mixing).
+    *  5. optional data-mixing sample (`mix = Some(stage)`, e.g.
+    *     [[MixStage.PerSource]] quota sampling).
     *
     * Handoff discipline (r16): stages whose verdict is a pure function
     * of the row (quality rules, blocklist, model gate, redaction) are
@@ -162,10 +164,9 @@ object GraftApi {
     * an action. For composition into larger pipelines (and for a cache
     * scope you can release without touching other pipelines' caches)
     * use [[curatePlan]]. */
-  def curateCorpus(docs: DataFrame, perSource: Int = Int.MaxValue,
+  def curateCorpus(docs: DataFrame,
                    spanDedupK: Option[Int] = None,
                    benchmark: Option[DataFrame] = None,
-                   decontamMinShared: Int = 3,
                    mix: Option[MixStage] = None,
                    blocklist: Seq[String] = Nil,
                    decontam: Option[DecontamStage] = None,
@@ -173,9 +174,8 @@ object GraftApi {
                    semanticDedupTau: Option[Double] = None,
                    semanticDedupK: Int = 16)
       : DataFrame =
-    curatePlan(docs, perSource, spanDedupK, benchmark, decontamMinShared,
-      mix, blocklist, decontam, qualityModel, semanticDedupTau,
-      semanticDedupK).frame
+    curatePlan(docs, spanDedupK, benchmark, mix, blocklist, decontam,
+      qualityModel, semanticDedupTau, semanticDedupK).frame
 
   /** Build the corpus-curation unit of work WITHOUT running any Spark
     * job: a pure plan-construction call returning the composed frame
@@ -187,10 +187,9 @@ object GraftApi {
     * at FIRST ACCESS of `frame`, not at construction, so composing a
     * curation into a larger program has no surprise side effects at
     * build time and the caller decides when the resolution cost lands. */
-  def curatePlan(docs: DataFrame, perSource: Int = Int.MaxValue,
+  def curatePlan(docs: DataFrame,
                  spanDedupK: Option[Int] = None,
                  benchmark: Option[DataFrame] = None,
-                 decontamMinShared: Int = 3,
                  mix: Option[MixStage] = None,
                  blocklist: Seq[String] = Nil,
                  decontam: Option[DecontamStage] = None,
@@ -267,7 +266,7 @@ object GraftApi {
       // the corpus side never shuffles its text
       val afterDecontam = benchmark match {
         case Some(bench) =>
-          val stage = decontam.getOrElse(DecontamStage.Exact(decontamMinShared))
+          val stage = decontam.getOrElse(DecontamStage.Exact())
           val (label, kept0) = stage match {
             case DecontamStage.Exact(minShared) =>
               // TIERED (r18): a benchmark whose plan stats bound its
@@ -279,7 +278,7 @@ object GraftApi {
               // (the streaming curationGate's pinned contract). The
               // join/agg/anti-join chain this replaces was +12 AQE
               // stage-jobs (~1.9 s) of the composed pipeline's
-              // gate-scale wall (CurateProbe r18 decomposition) while
+              // gate-scale wall (r18 decomposition) while
               // filtering 4750 docs against 500. Past the cap the
               // join form stands — [[Dedup.fitsShingleBroadcast]] is
               // the SAME stats tier decontaminate itself uses, so
@@ -388,10 +387,7 @@ object GraftApi {
       val redacted = afterNearDup.select(col("doc_id"), col("source"),
         TextAnalysis.redactTextExpr(col("text")).as("text"))
       stages += ("redact_pii" -> redacted)
-      // legacy perSource parameter maps onto the generalized mix stage
-      val mixStage = mix.orElse(
-        if (perSource == Int.MaxValue) None else Some(MixStage.PerSource(perSource)))
-      val out = mixStage match {
+      val out = mix match {
         case None => redacted.orderBy("doc_id")
         case Some(m) =>
           // the sampling branch consumes `redacted` twice (rank + output)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch profiler: times a named query N times in one session to
   * separate fixed (planning/codegen) cost from marginal (data) cost.
   * Usage: runMain graft.Profile <sfDir> <name> [reps]
@@ -11,17 +9,8 @@ object Profile {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // match Bench's session tuning (nanos flag, excluded rules) so
-    // profiled plans are the benched plans
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    // the same session as Bench, so profiled plans are the benched plans
+    val spark = GraftSession.get()
     // job-count + summed-execution listener: the floor decomposition
     // (wall − Σ job execution = driver-side gaps: Catalyst analysis,
     // broadcast setup, scheduling) that motivated the r16 curation

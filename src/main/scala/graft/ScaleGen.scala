@@ -36,14 +36,7 @@ object ScaleGen {
     val srcDir = args(0)
     val factor = if (args.length > 1) args(1).toInt else 10
     val mode = if (args.length > 2) args(2) else "bijective"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.get()
     val out = mode match {
       case "dup"       => dupDir(spark, srcDir, factor)
       case "crawl"     => crawlDir(spark, srcDir, factor)

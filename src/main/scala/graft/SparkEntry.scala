@@ -11,14 +11,13 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks
     * rows>0. The composed feature pipeline: every windowed feature of
-    * the reference's process_pipeline off a single shuffle. */
+    * the reference's process_pipeline off a single shuffle. The only
+    * [[GraftSession.tune]] call site: it may be handed a session built
+    * outside graft. The declared `queries` below never set a conf;
+    * they run under whatever session they are given. */
   def entry(spark: SparkSession): DataFrame = {
     GraftSession.tune(spark)
     TimeSeries.featurePipeline(Tables.events(spark, "/root/testdata/sf0.001"))
-  }
-
-  private def ev(s: SparkSession, dir: String): DataFrame = {
-    GraftSession.tune(s); Tables.events(s, dir)
   }
 
   /** Deterministic URL-injection view for q_url_stats (the synthetic
@@ -63,32 +62,28 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // E. dashboard analytics + A. ingest
-    "q_metrics"        -> ((s, d) => Analytics.metrics(ev(s, d))),
-    "q_distribution"   -> ((s, d) => Analytics.distribution(ev(s, d))),
-    "q_corr_matrix"    -> ((s, d) => Analytics.corrMatrix(TimeSeries.weatherView(ev(s, d)))),
-    "q_group_compare"  -> ((s, d) => Analytics.groupCompare(ev(s, d))),
-    "q_latest_per_key" -> ((s, d) => Analytics.latestPerKey(ev(s, d))),
-    "q_load_timerange" -> ((s, d) => {
-      GraftSession.tune(s)
+    "q_metrics"        -> ((s, d) => Analytics.metrics(Tables.events(s, d))),
+    "q_distribution"   -> ((s, d) => Analytics.distribution(Tables.events(s, d))),
+    "q_corr_matrix"    -> ((s, d) => Analytics.corrMatrix(TimeSeries.weatherView(Tables.events(s, d)))),
+    "q_group_compare"  -> ((s, d) => Analytics.groupCompare(Tables.events(s, d))),
+    "q_latest_per_key" -> ((s, d) => Analytics.latestPerKey(Tables.events(s, d))),
+    "q_load_timerange" -> ((s, d) =>
       Analytics.loadTimerange(Tables.eventsRaw(s, d),
-        "2024-01-10 00:00:00", "2024-01-20 00:00:00")
-    }),
-    "q_json_ingest"    -> ((s, d) => Analytics.jsonIngest(ev(s, d))),
-    "q_dedup_key"      -> ((s, d) => Analytics.dedupByKey(ev(s, d))),
-    "q_ingest_metrics" -> ((s, d) => Analytics.ingestMetrics(ev(s, d))),
+        "2024-01-10 00:00:00", "2024-01-20 00:00:00")),
+    "q_json_ingest"    -> ((s, d) => Analytics.jsonIngest(Tables.events(s, d))),
+    "q_dedup_key"      -> ((s, d) => Analytics.dedupByKey(Tables.events(s, d))),
+    "q_ingest_metrics" -> ((s, d) => Analytics.ingestMetrics(Tables.events(s, d))),
     "q_distinct_sketch" -> ((s, d) =>
-      Analytics.distinctSketchRollup(Analytics.distinctSketchDaily(ev(s, d)))),
+      Analytics.distinctSketchRollup(Analytics.distinctSketchDaily(Tables.events(s, d)))),
     // the daily sketch layer's oracle path: exact distincts hash-gated
     // against DuckDB, HLL estimate reduced to a per-day bound boolean
     // the hash CAN gate (see distinctSketchDailyCheck's scaladoc)
     "q_distinct_sketch_check" -> ((s, d) =>
-      Analytics.distinctSketchDailyCheck(ev(s, d))),
-    "q_validate_ingest" -> ((s, d) => Analytics.validateIngest(ev(s, d))),
-    "q_recent_window"  -> ((s, d) => {
-      GraftSession.tune(s)
-      Analytics.recentWindow(Tables.eventsRaw(s, d), hours = 48)
-    }),
-    "q_feature_pipeline" -> ((s, d) => TimeSeries.featurePipeline(ev(s, d))),
+      Analytics.distinctSketchDailyCheck(Tables.events(s, d))),
+    "q_validate_ingest" -> ((s, d) => Analytics.validateIngest(Tables.events(s, d))),
+    "q_recent_window"  -> ((s, d) =>
+      Analytics.recentWindow(Tables.eventsRaw(s, d), hours = 48)),
+    "q_feature_pipeline" -> ((s, d) => TimeSeries.featurePipeline(Tables.events(s, d))),
     "q1_pricing"       -> ((s, d) => Analytics.pricingSummary(Tables.lineitem(s, d))),
     "q_join_enrich"    -> ((s, d) =>
       Analytics.joinEnrich(Tables.customer(s, d), Tables.nation(s, d), Tables.region(s, d))),
@@ -100,36 +95,36 @@ object SparkEntry {
     "q_supplier_stats" -> ((s, d) =>
       Analytics.supplierStats(Tables.supplier(s, d), Tables.nation(s, d))),
     // B. time-series feature engineering
-    "q_time_features"   -> ((s, d) => TimeSeries.timeFeatures(ev(s, d))),
-    "q_lag_features"    -> ((s, d) => TimeSeries.lagFeatures(ev(s, d))),
-    "q_rolling_stats"   -> ((s, d) => TimeSeries.rollingStats(ev(s, d))),
-    "q_weather_indices" -> ((s, d) => TimeSeries.weatherIndices(TimeSeries.weatherView(ev(s, d)))),
-    "q_diff"            -> ((s, d) => TimeSeries.diff(ev(s, d))),
-    "q_interactions"    -> ((s, d) => TimeSeries.interactions(TimeSeries.weatherView(ev(s, d)))),
-    "q_target_shift"    -> ((s, d) => TimeSeries.targets(ev(s, d))),
-    "q_will_rain"       -> ((s, d) => TimeSeries.willRain(ev(s, d))),
-    "q_daily_range"     -> ((s, d) => TimeSeries.dailyRange(ev(s, d))),
-    "q_sessionize"      -> ((s, d) => TimeSeries.sessionize(ev(s, d))),
-    "q_asof_join"       -> ((s, d) => TimeSeries.asofJoin(ev(s, d))),
-    "q_range_join"      -> ((s, d) => TimeSeries.rangeJoin(ev(s, d))),
-    "q_quantiles"       -> ((s, d) => TimeSeries.quantiles(ev(s, d))),
-    "q_quantiles_approx" -> ((s, d) => TimeSeries.quantilesApprox(ev(s, d))),
-    "q_quantiles_approx_check" -> ((s, d) => TimeSeries.quantilesApproxCheck(ev(s, d))),
+    "q_time_features"   -> ((s, d) => TimeSeries.timeFeatures(Tables.events(s, d))),
+    "q_lag_features"    -> ((s, d) => TimeSeries.lagFeatures(Tables.events(s, d))),
+    "q_rolling_stats"   -> ((s, d) => TimeSeries.rollingStats(Tables.events(s, d))),
+    "q_weather_indices" -> ((s, d) => TimeSeries.weatherIndices(TimeSeries.weatherView(Tables.events(s, d)))),
+    "q_diff"            -> ((s, d) => TimeSeries.diff(Tables.events(s, d))),
+    "q_interactions"    -> ((s, d) => TimeSeries.interactions(TimeSeries.weatherView(Tables.events(s, d)))),
+    "q_target_shift"    -> ((s, d) => TimeSeries.targets(Tables.events(s, d))),
+    "q_will_rain"       -> ((s, d) => TimeSeries.willRain(Tables.events(s, d))),
+    "q_daily_range"     -> ((s, d) => TimeSeries.dailyRange(Tables.events(s, d))),
+    "q_sessionize"      -> ((s, d) => TimeSeries.sessionize(Tables.events(s, d))),
+    "q_asof_join"       -> ((s, d) => TimeSeries.asofJoin(Tables.events(s, d))),
+    "q_range_join"      -> ((s, d) => TimeSeries.rangeJoin(Tables.events(s, d))),
+    "q_quantiles"       -> ((s, d) => TimeSeries.quantiles(Tables.events(s, d))),
+    "q_quantiles_approx" -> ((s, d) => TimeSeries.quantilesApprox(Tables.events(s, d))),
+    "q_quantiles_approx_check" -> ((s, d) => TimeSeries.quantilesApproxCheck(Tables.events(s, d))),
     // C. missing values / encoding / scaling
-    "q_ffill"          -> ((s, d) => MissingValues.ffill(MissingValues.maskedView(ev(s, d)))),
-    "q_interpolate"    -> ((s, d) => MissingValues.interpolate(MissingValues.maskedView(ev(s, d)))),
-    "q_mode_fill"      -> ((s, d) => MissingValues.modeFill(MissingValues.maskedView(ev(s, d)))),
-    "q_null_filter"    -> ((s, d) => MissingValues.nullFilter(MissingValues.maskedView(ev(s, d)))),
-    "q_label_encode"   -> ((s, d) => Encoders.labelEncode(ev(s, d))),
-    "q_standard_scale" -> ((s, d) => Encoders.standardScale(ev(s, d))),
+    "q_ffill"          -> ((s, d) => MissingValues.ffill(MissingValues.maskedView(Tables.events(s, d)))),
+    "q_interpolate"    -> ((s, d) => MissingValues.interpolate(MissingValues.maskedView(Tables.events(s, d)))),
+    "q_mode_fill"      -> ((s, d) => MissingValues.modeFill(MissingValues.maskedView(Tables.events(s, d)))),
+    "q_null_filter"    -> ((s, d) => MissingValues.nullFilter(MissingValues.maskedView(Tables.events(s, d)))),
+    "q_label_encode"   -> ((s, d) => Encoders.labelEncode(Tables.events(s, d))),
+    "q_standard_scale" -> ((s, d) => Encoders.standardScale(Tables.events(s, d))),
     // D. data quality
-    "q_quality_dups"     -> ((s, d) => Quality.duplicateKeys(ev(s, d))),
-    "q_quality_missing"  -> ((s, d) => Quality.missingProfile(MissingValues.maskedView(ev(s, d)))),
-    "q_quality_range"    -> ((s, d) => Quality.rangeCheck(TimeSeries.weatherView(ev(s, d)))),
-    "q_quality_highnull" -> ((s, d) => Quality.highNullRows(MissingValues.maskedView(ev(s, d)))),
-    "q_feature_stats"    -> ((s, d) => Quality.featureStats(TimeSeries.weatherView(ev(s, d)))),
+    "q_quality_dups"     -> ((s, d) => Quality.duplicateKeys(Tables.events(s, d))),
+    "q_quality_missing"  -> ((s, d) => Quality.missingProfile(MissingValues.maskedView(Tables.events(s, d)))),
+    "q_quality_range"    -> ((s, d) => Quality.rangeCheck(TimeSeries.weatherView(Tables.events(s, d)))),
+    "q_quality_highnull" -> ((s, d) => Quality.highNullRows(MissingValues.maskedView(Tables.events(s, d)))),
+    "q_feature_stats"    -> ((s, d) => Quality.featureStats(TimeSeries.weatherView(Tables.events(s, d)))),
     "q_quality_report"   -> ((s, d) => {
-      val e = ev(s, d)
+      val e = Tables.events(s, d)
       Quality.report(e, TimeSeries.weatherView(e), MissingValues.maskedView(e))
     }),
     // H. text analysis + exact dedup
@@ -476,7 +471,6 @@ object SparkEntry {
     // H. multimodal plumbing (synthetic media; REAL PPM decode + resize
     // + per-frame features; rows-only — pinned by MultimodalSpec)
     "q_media_features" -> ((s, _) => {
-      GraftSession.tune(s)
       // scalar projection of the per-frame embedding: the driver's
       // pandas canonicalizer cannot sort/hash array columns (round-2
       // 'unhashable numpy.ndarray'); internal consumers (the ANN
@@ -491,13 +485,11 @@ object SparkEntry {
     // the codecs' oracle path (r14 verdict item 6): decode invariants
     // the hash CAN gate, expected values recomputed by DuckDB from
     // synthMedia's deterministic id arithmetic
-    "q_media_features_check" -> ((s, _) => {
-      GraftSession.tune(s)
-      Multimodal.mediaCheck(Multimodal.synthMedia(s, 300))
-    }),
+    "q_media_features_check" -> ((s, _) =>
+      Multimodal.mediaCheck(Multimodal.synthMedia(s, 300))),
     // F. ML feature preparation (columnar, oracle-checkable)
     "q_ml_feature_prep" -> ((s, d) => {
-      val masked = MissingValues.maskedView(ev(s, d))
+      val masked = MissingValues.maskedView(Tables.events(s, d))
         .withColumn("mostly_null",
           when(col("event_id") % 4 === 0, col("value")).otherwise(lit(null).cast("double")))
       graft.ml.FeaturePrep.prepare(masked, Seq("event_id"),

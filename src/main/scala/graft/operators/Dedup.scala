@@ -319,6 +319,11 @@ object Dedup {
     * per-doc match count, partial-combined on the corpus partitions.
     * Output covers EVERY corpus document (unmatched → n_shared 0).
     *
+    * Precondition: ONE corpus row per `doc_id`. The per-doc count is
+    * `count(1)` over each row's distinct shingles, so duplicate
+    * `doc_id` rows each add their own shingles (a shingle both share
+    * counts twice) and the doc appears once per row.
+    *
     * The broadcast is GUARDED: an explicit `broadcast()` hint bypasses
     * `spark.sql.autoBroadcastJoinThreshold`, so a "benchmark" that
     * turns out corpus-sized would OOM every executor. The guard is
@@ -450,9 +455,15 @@ object Dedup {
     * strings — identical counts modulo a 2^-64 collision), and the
     * source label is dictionary-encoded BEFORE the explode so the one
     * corpus-sized exchange moves (int64, int64) rows, not a repeated
-    * STRING per shingle. Ids are assigned in lexicographic source
-    * order, so pair generation and output ordering are identical to
-    * the string form; the final ≤ nSources²/2-row projection decodes.
+    * STRING per shingle. Ids are assigned in source-label order, so
+    * pair generation and output ordering are identical to the string
+    * form; the final ≤ nSources²/2-row projection decodes.
+    *
+    * Label order is UTF-8 byte (= code-point) order, Spark's string
+    * order — the order the DuckDB oracle's `a.source < b.source` uses —
+    * NOT java.lang.String's UTF-16 unit order (the two disagree when a
+    * U+E000–U+FFFF label meets a supplementary-plane one). `src_a <
+    * src_b` holds in that order in both arms.
     *
     * NOTE eager construction (laziness break): the source dictionary
     * is collected when the DataFrame is BUILT, and for

@@ -17,10 +17,46 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("every declared query runs and returns rows") {
+    // building and running a query never rewrites the caller's
+    // session: GraftSession decides confs, queries only read them
     SparkEntry.queries.foreach { case (name, fn) =>
+      val before = spark.conf.getAll
       val n = fn(spark, sfDir).count()
       assert(n > 0, s"$name returned no rows")
+      assert(spark.conf.getAll == before, s"$name changed the session's confs")
     }
+  }
+
+  test("queries run under the caller's session: AQE switched off stays off") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val aqe = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(aqe)
+    try {
+      spark.conf.set(aqe, "false")
+      Seq("q_metrics", "q_load_timerange").foreach { name =>
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        assert(df.collect().nonEmpty, s"$name returned no rows")
+        assert(spark.conf.get(aqe) == "false", s"$name switched AQE back on")
+        val adaptive = df.queryExecution.executedPlan.collectFirst {
+          case a: AdaptiveSparkPlanExec => a
+        }
+        assert(adaptive.isEmpty, s"$name executed an adaptive plan")
+      }
+    } finally spark.conf.set(aqe, prev)
+  }
+
+  test("tune brings a foreign session to graft's confs, keeping its own rule exclusions") {
+    val rules = "spark.sql.optimizer.excludedRules"
+    val own = "org.apache.spark.sql.catalyst.optimizer.CollapseProject"
+    val foreign = spark.newSession()
+    foreign.conf.set("spark.sql.adaptive.enabled", "false")
+    foreign.conf.set(rules, own)
+    GraftSession.tune(foreign)
+    assert(foreign.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(foreign.conf.get(rules) ==
+      s"$own,org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+    assert(spark.conf.get(rules) ==
+      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
   }
 
   test("every query key has matching columns mindset: distinct names") {

@@ -172,7 +172,7 @@ class IntegrationSpec extends AnyFunSuite {
     assert(graft.operators.Dedup.minhashPairs(survivors).count() == 0,
       "curated corpus must contain no near-dup pair")
     // quota sampling composes
-    val sampled = GraftApi.curateCorpus(corpus, perSource = 3)
+    val sampled = GraftApi.curateCorpus(corpus, mix = Some(MixStage.PerSource(3)))
     val bySource = sampled.collect().groupBy(_.getAs[String]("source"))
     assert(bySource.values.forall(_.length <= 3))
     GraftApi.releaseCaches()
@@ -184,7 +184,8 @@ class IntegrationSpec extends AnyFunSuite {
     val base = graft.sources.Tables.documents(spark, sfDir)
       .select("doc_id", "source", "text")
     val nIn = base.count()
-    val curation = GraftApi.curatePlan(base, perSource = 3, spanDedupK = Some(20))
+    val curation = GraftApi.curatePlan(base, mix = Some(MixStage.PerSource(3)),
+      spanDedupK = Some(20))
     try {
       val nOut = curation.frame.count()
       val m = curation.manifest.collect()
@@ -431,7 +432,7 @@ class IntegrationSpec extends AnyFunSuite {
       .select("doc_id", "source", "text")
     val bench = Seq((1L, "what is the boiling point of water at sea level"))
       .toDF("q_id", "text")
-    val curation = GraftApi.curatePlan(base, perSource = 3,
+    val curation = GraftApi.curatePlan(base, mix = Some(MixStage.PerSource(3)),
       spanDedupK = Some(20), benchmark = Some(bench),
       blocklist = Seq("dup"))
     try {

@@ -273,6 +273,15 @@ class MonitoringSpec extends AnyFunSuite {
       "leftover budget must upgrade a small tail back to min-of-5")
   }
 
+  test("bench total path: a non-default core count never overwrites bench_total.json") {
+    import graft.Bench.totalPath
+    assert(totalPath(None, subset = false, cpus = 4, available = 4) == "bench_total.json")
+    assert(totalPath(None, subset = false, cpus = 8, available = 4) == "bench_total_c8.json")
+    assert(totalPath(None, subset = true, cpus = 8, available = 4)
+      .endsWith("bench_total_subset.json"))
+    assert(totalPath(Some("/x/t.json"), subset = true, cpus = 8, available = 4) == "/x/t.json")
+  }
+
   test("convicted slope windows rename their wall-ratio keys (_loaded)") {
     import graft.Bench.ratioKey
     // quiet window: the quotable name

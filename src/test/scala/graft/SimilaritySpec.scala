@@ -529,6 +529,25 @@ class SimilaritySpec extends AnyFunSuite {
     graft.operators.Caches.releaseAll()
   }
 
+  test("decontaminate: duplicate doc_id rows break the one-row-per-doc precondition") {
+    // the per-doc count is count(1) over each ROW's distinct shingles
+    // (no per-doc distinct): two rows of doc 1, each sharing the same
+    // 2 benchmark shingles, count 4 — over minShared, though neither
+    // row alone is — and the doc appears once per row
+    import spark.implicits._
+    val benchmark = Seq((100L, "the capital of france is paris")).toDF("doc_id", "text")
+    val corpus = Seq(
+      (1L, "quiz the capital of france"),
+      (1L, "the capital of france today"),
+      (2L, "the capital of france"))
+      .toDF("doc_id", "text")
+    val out = Dedup.decontaminate(corpus, benchmark, minShared = 3).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_shared"),
+        r.getAs[Long]("contaminated"))).toSeq.sorted
+    assert(out == Seq((1L, 4L, 1L), (1L, 4L, 1L), (2L, 2L, 0L)), s"$out")
+    graft.operators.Caches.releaseAll()
+  }
+
   test("decontaminateKeepExpr agrees with batch decontaminate on the corpus") {
     // the streaming gate's scan-local predicate (driver-collected
     // shingle set, codegen'd countInLongSet) must draw the SAME line
@@ -614,6 +633,28 @@ class SimilaritySpec extends AnyFunSuite {
     val distributed =
       Dedup.sourceOverlap(docs, driverFoldMaxK = -1).collect().toSeq
     assert(folded.nonEmpty, "expected overlapping source pairs at sf0.001")
+    assert(folded == distributed)
+    graft.operators.Caches.releaseAll()
+  }
+
+  test("sourceOverlap: labels order by code point (UTF-8 bytes), both arms") {
+    // U+FF21 sorts BELOW the supplementary U+1D400 by code point (the
+    // order the DuckDB oracle's `a.source < b.source` uses) but ABOVE
+    // it in java.lang.String's UTF-16 unit order
+    import spark.implicits._
+    val bmp = "\uFF21"
+    val supp = new String(Character.toChars(0x1D400))
+    assert(supp.compareTo(bmp) < 0, "labels must disagree under UTF-16 order")
+    val docs = Seq(
+      (1L, "a", "one two three four"),
+      (2L, bmp, "one two three four"),
+      (3L, supp, "one two three four"))
+      .toDF("doc_id", "source", "text")
+    val folded = Dedup.sourceOverlap(docs).collect().toSeq
+    val distributed =
+      Dedup.sourceOverlap(docs, driverFoldMaxK = -1).collect().toSeq
+    assert(folded.map(r => (r.getString(0), r.getString(1))) ==
+      Seq(("a", bmp), ("a", supp), (bmp, supp)))
     assert(folded == distributed)
     graft.operators.Caches.releaseAll()
   }

@@ -406,16 +406,26 @@ class TextAnalysisSpec extends AnyFunSuite {
   }
 
   test("threshold-refined sample is bit-identical to the whole-corpus rank") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit, when}
     // both test tables, both a tiny and an over-quota perSource: the
-    // refined prefilter must reproduce the exact rank EXACTLY
+    // refined prefilter must reproduce the exact rank EXACTLY — also
+    // with a null-source stratum larger than the quota, whose salt
+    // bound row carries a null key
     for (dir <- Seq(sfDir, "/root/testdata/sf0.01"); quota <- Seq(1, 7, 100)) {
       val d = graft.sources.Tables.documents(spark, dir)
-      val refined = TextAnalysis.stratifiedSample(d, quota)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
-      val exact = TextAnalysis.stratifiedSampleExact(d, quota)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
-      assert(refined == exact, s"refined != exact at $dir quota=$quota")
+      val nullSource = d.withColumn("source",
+        when(col("doc_id") % 3 === 0, lit(null).cast("string"))
+          .otherwise(col("source")))
+      for ((label, frame) <- Seq("plain" -> d, "null-source" -> nullSource)) {
+        def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+          .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2))).toSeq.sorted
+        val refined = rows(TextAnalysis.stratifiedSample(frame, quota))
+        val exact = rows(TextAnalysis.stratifiedSampleExact(frame, quota))
+        assert(refined == exact, s"refined != exact at $dir quota=$quota ($label)")
+        if (label == "null-source")
+          assert(exact.count(_._2.isEmpty) == math.min(quota,
+            frame.filter(col("source").isNull).count()))
+      }
     }
   }
 
